@@ -27,6 +27,7 @@ src/lib.rs:158,173) so query time is a single dot product.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 from typing import Any
@@ -36,9 +37,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nano_vectordb_rs_spark.functions.vector import (
-    array_lit,
     as_double_array,
     dot_expr,
+    folded_array_lit,
     norm_expr,
     qcol,
 )
@@ -206,8 +207,6 @@ class VectorCollection:
         info = annotated.select(
             ID_COL, "__batch_pos__", "__dim__", "__norm__"
         ).collect()
-        import math
-
         for r in info:
             # same per-row predicate the old limit(1) probe used:
             # ~dim_ok | (norm <= 0) | isnan(norm), first offender raises
@@ -296,20 +295,29 @@ class VectorCollection:
 
         ``where`` may be any Column predicate — the Spark generalization of the
         reference's DataFilter closure (src/lib.rs:112), but optimizable.
+
+        ``__metrics__`` equals, bit for bit, a left-to-right double fold of
+        the stored float32 vector against the driver-normalized query. A
+        query that is zero, non-finite or whose norm overflows raises
+        ``ZeroVectorError`` before any Spark work: a NaN score would sort
+        above every real score and fill the top-k. The query travels as one
+        folded literal node (``folded_array_lit``): analyzing a literal with
+        one node per element was most of each call's plan-build time.
         """
         if len(query_vector) != self.embedding_dim:
             raise DimensionError(
                 f"query dim {len(query_vector)} != collection dim {self.embedding_dim}"
             )
         qnorm = sum(x * x for x in query_vector) ** 0.5
-        if qnorm <= 0:
-            raise ZeroVectorError("zero query vector")
+        # a NaN or infinite element makes the norm NaN or inf
+        if not 0 < qnorm < math.inf:
+            raise ZeroVectorError("zero, non-finite or overflowing query vector")
         q = [x / qnorm for x in query_vector]  # O3a, hoisted to the driver
 
         df = self._df
         if where is not None:
             df = df.filter(where)
-        score = F.expr(dot_expr(as_double_array(VECTOR_COL), array_lit(q)))
+        score = F.expr(dot_expr(VECTOR_COL, folded_array_lit(q)))
         df = df.withColumn(METRICS_COL, score)
         if better_than is not None:
             df = df.filter(F.col(METRICS_COL) >= float(better_than))
@@ -339,9 +347,7 @@ class VectorCollection:
         df = self._df
         if where is not None:
             df = df.filter(where)
-        score = F.expr(
-            dot_expr(as_double_array(VECTOR_COL), as_double_array("__query_vec__"))
-        )
+        score = F.expr(dot_expr(VECTOR_COL, "__query_vec__"))
         scored = df.join(F.broadcast(qnorm)).withColumn(METRICS_COL, score)
         if better_than is not None:
             scored = scored.filter(F.col(METRICS_COL) >= float(better_than))
@@ -359,10 +365,14 @@ class VectorCollection:
 
     def get(self, ids: list[str], ordered: bool = False) -> DataFrame:
         """Point lookup; missing ids silently dropped (src/lib.rs:263-270).
+        Ids are compared as strings; duplicates return their row once.
 
-        ``ordered=True`` returns rows in requested-id order, matching the
-        reference's sequential lookup loop — a broadcast inner join tagged
-        with the request position, so still a single scan, no shuffle."""
+        The unordered lookup is an ``IN`` filter pushed to the Parquet scan:
+        the id list is driver-sized by contract, so one filtered scan beats
+        a broadcast join, which costs a second Spark job. ``ordered=True``
+        returns rows in requested-id order, matching the reference's
+        sequential lookup loop — a broadcast inner join tagged with the
+        request position, so still a single scan, no shuffle."""
         if ordered:
             ids_df = self.spark.createDataFrame(
                 [(str(i), p) for p, i in enumerate(ids)], f"{ID_COL} string, __pos__ int"
@@ -372,8 +382,7 @@ class VectorCollection:
                 .orderBy("__pos__")
                 .drop("__pos__")
             )
-        ids_df = self.spark.createDataFrame([(str(i),) for i in ids], f"{ID_COL} string")
-        return self._df.join(F.broadcast(ids_df), ID_COL, "left_semi")
+        return self._df.filter(F.col(ID_COL).isin([str(i) for i in ids]))
 
     def delete(self, ids: list[str]) -> None:
         """Anti-join removal (src/lib.rs:273-286); cannot desynchronize

@@ -18,6 +18,8 @@ across engines; declared queries round to 6 decimals on top of that.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -27,8 +29,19 @@ from pyspark.sql import functions as F
 
 
 def dot_expr(a: str, b: str) -> str:
-    """Sequential left-to-right dot product of two array<double> SQL expressions."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+    """Sequential left-to-right double dot product of two numeric array SQL
+    expressions.
+
+    Each element is widened to double inside the lambda, so a stored
+    ``array<float>`` is folded directly instead of first being copied into
+    an ``array<double>`` per row. Float-to-double widening is exact, so the
+    sum is bit-identical to casting the whole array first; for arguments
+    that already are ``array<double>`` the casts are same-type and the
+    optimizer drops them."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
 
 
 def as_double_array(col: str) -> str:
@@ -64,6 +77,17 @@ def array_lit(values: list[float]) -> str:
     and both Spark and DuckDB parse decimal literals to the nearest double,
     so the same text yields the same bits in both engines."""
     return "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in values) + ")"
+
+
+def folded_array_lit(values: list[float]) -> str:
+    """A double array literal that Spark analyzes as ONE node: a constant
+    ``from_json`` the optimizer folds, instead of ``array_lit``'s one
+    ``CAST`` child per element (re-analyzing those dominates a per-call
+    plan build at dim 256). ``json.dumps`` writes ``repr`` and Spark's JSON
+    reader parses to the nearest double, so the bits equal ``array_lit``'s.
+    Spark-only (DuckDB cannot parse it) and finite values only (JSON has no
+    NaN/Infinity)."""
+    return f"from_json('{json.dumps(values)}', 'array<double>')"
 
 
 def normalize_expr(a: str) -> str:

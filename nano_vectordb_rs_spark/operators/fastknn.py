@@ -145,7 +145,11 @@ def topk_over(
                 np.maximum(norms, np.float32(1e-30), out=norms)
                 scores = scores / norms
             if len(scores) > k:
-                idx = np.argpartition(-scores, k)[:k]
+                # every row tying the batch's k-th score survives: the
+                # final ORDER BY breaks those ties by id, so dropping one
+                # here could drop the exact answer
+                kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+                idx = np.flatnonzero(scores >= kth)
             else:
                 idx = np.arange(len(scores))
             order = pa.array(idx.astype(np.int64))

@@ -5,7 +5,11 @@ The 100 TB design claims in this repo are statements about physical plans —
 sorts". This module turns those claims into assertions a test can make, by
 parsing the executed (post-AQE) plan string:
 
-- ``n_shuffles``      : Exchange operators (each is a full data shuffle)
+- ``n_shuffles``      : hash/range/single-partition Exchange operators
+                        (each is a full data shuffle)
+- ``n_round_robin``   : RoundRobinPartitioning Exchanges (keyless spreads),
+                        kept apart so existing ``n_shuffles`` bounds keep
+                        their meaning
 - ``n_broadcasts``    : BroadcastExchange / BroadcastHashJoin build sides
 - ``has_take_ordered``: TakeOrderedAndProject present (bounded top-k, the
                         distributed twin of the reference's capped heap,
@@ -53,6 +57,7 @@ def audit_plan(df: DataFrame) -> dict:
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     return {
         "n_shuffles": len(re.findall(r"Exchange (?:hash|range|Single)", plan)),
+        "n_round_robin": len(re.findall(r"Exchange RoundRobinPartitioning", plan)),
         "n_broadcasts": plan.count("BroadcastExchange"),
         "n_broadcast_joins": plan.count("BroadcastHashJoin")
         + plan.count("BroadcastNestedLoopJoin"),

@@ -106,6 +106,12 @@ def test_get_missing_ids_silently_dropped(spark, coll):
     coll.upsert(make_batch(spark, [("a", [1, 0, 0, 0], None), ("b", [0, 1, 0, 0], None)]))
     got = coll.get(["a", "nope", "b", "also-nope"])
     assert sorted(r["__id__"] for r in got.collect()) == ["a", "b"]
+    # duplicate requested ids return their row once; ids compare as strings
+    got = coll.get(["a", "a", "nope", "b", "a"])
+    assert sorted(r["__id__"] for r in got.collect()) == ["a", "b"]
+    coll.upsert(make_batch(spark, [("7", [0, 0, 1, 0], None)]))
+    assert [r["__id__"] for r in coll.get([7, 8]).collect()] == ["7"]
+    assert coll.get([]).collect() == []
 
 
 def test_get_ordered_matches_request_order(spark, coll):
@@ -192,6 +198,11 @@ def test_query_dim_and_zero_query_guards(coll):
         coll.query([1.0, 0.0])
     with pytest.raises(ZeroVectorError):
         coll.query([0.0, 0.0, 0.0, 0.0])
+    # non-finite input fails typed before any Spark work: a NaN score would
+    # sort above every real score and fill the top-k
+    for bad in (math.nan, math.inf, -math.inf):
+        with pytest.raises(ZeroVectorError):
+            coll.query([bad, 1.0, 0.0, 0.0])
 
 
 def test_threshold_boundary(spark, coll):
@@ -227,6 +238,27 @@ def test_deterministic_tiebreak(spark, coll):
     )
     rows = coll.query([1, 0, 0, 0], 2).collect()
     assert [r["__id__"] for r in rows] == ["a", "b"]
+
+
+def test_query_score_is_left_to_right_double_fold(spark, coll):
+    # determinism contract: __metrics__ is exactly (==, not approx) the
+    # sequential double sum of the stored float32 vector times the
+    # driver-normalized query
+    coll.upsert(
+        make_batch(
+            spark,
+            [("a", [0.3, -1.7, 2.9, 0.11], None), ("b", [5.0, 0.2, -0.7, 1.3], None)],
+        )
+    )
+    q = [0.61, 0.2, -1.3, 0.47]
+    qn = sum(x * x for x in q) ** 0.5
+    unit = [x / qn for x in q]
+    stored = {r["__id__"]: r["vector"] for r in coll.df.collect()}
+    for r in coll.query(q, top_k=2).collect():
+        acc = 0.0
+        for v, u in zip(stored[r["__id__"]], unit):
+            acc += v * u
+        assert r["__metrics__"] == acc
 
 
 def test_compact_merges_small_files(spark, tmp_path):

@@ -16,6 +16,7 @@ from nano_vectordb_rs_spark.operators.fastknn import (
     knn_join_fast,
     knn_topk_fast,
     normalize_map_in_arrow,
+    topk_over,
 )
 from nano_vectordb_rs_spark.operators.similarity import JOIN_K, N_QUERIES, knn_join
 from tests.conftest import SF_DIR
@@ -55,3 +56,14 @@ def test_normalize_arrow_unit_norms(spark):
     rows = out.select(F.max(F.abs(norm - 1.0)).alias("err")).collect()
     assert rows[0]["err"] < 1e-5
     assert out.count() == emb.count()
+
+
+def test_topk_over_keeps_ties_at_batch_kth_score(spark):
+    # one Arrow batch holding two rows with the same vector: the per-batch
+    # pre-reduction must keep both so ORDER BY score DESC, id ASC picks "a"
+    df = spark.createDataFrame(
+        [("b", [1.0, 0.0]), ("a", [1.0, 0.0]), ("c", [0.0, 1.0])],
+        "`__id__` string, vector array<float>",
+    ).coalesce(1)
+    got = topk_over(df, [1.0, 0.0], k=1).collect()
+    assert [r["__id__"] for r in got] == ["a"]

@@ -631,3 +631,30 @@ def test_input_sized_width_policy(spark):
     assert 1 < w <= spark.sparkContext.defaultParallelism
     assert input_sized_width(spark, "/root/testdata/sf0.001", "lineitem", 1 << 20) == 0
     assert input_sized_width(spark, "/nonexistent", "lineitem", 1 << 20) == 0
+
+
+def test_collection_serving_calls_are_single_scans(spark, tmp_path):
+    from nano_vectordb_rs_spark.collection import VectorCollection
+
+    c = VectorCollection.open(spark, 4, str(tmp_path / "coll"))
+    c.upsert(
+        spark.createDataFrame(
+            [(f"v{i}", [1.0, float(i), 0.5, 0.0], "x") for i in range(8)],
+            "`__id__` string, vector array<float>, tag string",
+        )
+    )
+    c.save()
+    # get: an IN filter pushed to the parquet scan, no broadcast job
+    a = audit_plan(c.get(["v1", "v5"]))
+    assert a["n_broadcasts"] == 0 and a["n_broadcast_joins"] == 0
+    assert a["n_shuffles"] == 0
+    assert any("__id__" in p for p in a["pushed_filters"])
+    # query: scan -> score -> bounded top-k, no exchange
+    a = audit_plan(c.query([1.0, 0.0, 0.0, 0.0], top_k=3))
+    assert a["has_take_ordered"] and a["n_shuffles"] == 0
+
+
+def test_round_robin_exchange_counted_apart_from_shuffles(spark):
+    a = audit_plan(spark.range(100).repartition(3))
+    assert a["n_round_robin"] == 1
+    assert a["n_shuffles"] == 0
