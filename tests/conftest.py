@@ -36,7 +36,16 @@ def duck():
     # oracle to 1 GB. 8 threads bounds per-query memory without slowing the
     # tiny fixtures; a 4 GB floor keeps block allocation viable and lets
     # the spill dir absorb the rest.
-    con.execute("SET threads=8")
+    # One thread, not 8: the "Failed to allocate block of 16384 bytes (bad
+    # allocation)" is malloc itself failing, not the memory limit. Planning
+    # ann_recall's 300 KB oracle on 8 threads maps ~50,000 memory regions in
+    # this process (measured in /proc/self/maps), against Linux's default
+    # vm.max_map_count of 65,530, so the query fails at random even under an
+    # 8 GB limit, and the next few DuckDB calls in the same process fail too
+    # (seen as bigram_stats failing right after ann_recall). On one thread
+    # the same query peaks at ~750 regions and ~1.2 GB RSS (vs ~2.1 GB) and
+    # runs no slower; single-threaded sums are also order-stable.
+    con.execute("SET threads=1")
     # cap = min(8GB, ~60% of MemAvailable), floor 4GB. 8, not 24 (r16):
     # the ann_recall oracle (a 300KB five-CTE plan) runs at ~2GB peak
     # under a tight limit (measured standalone, 4GB cap) but under the
