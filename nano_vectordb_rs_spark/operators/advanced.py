@@ -31,17 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nano_vectordb_rs_spark.operators.events import _events
+from nano_vectordb_rs_spark.operators.relational import DEC, _as_dbl, _dsum
 from nano_vectordb_rs_spark.sources.tables import load_table
-
-DEC = "decimal(28,10)"
-
-
-def _dsum(expr: str) -> F.Column:
-    return F.sum(F.expr(expr).cast(DEC))
-
-
-def _as_dbl(c: F.Column) -> F.Column:
-    return c.cast("double")
 
 
 # --- Q6-style revenue-change forecast (pure scan+filter+agg) -----------------

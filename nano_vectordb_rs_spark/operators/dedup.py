@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources import tables
+from nano_vectordb_rs_spark.sources.tables import load_table
 
 N_HASHES = 8
 N_BANDS = 4  # rows-per-band = 2
@@ -715,13 +716,9 @@ def exact_substring_contamination(spark: SparkSession, sf_dir: str) -> DataFrame
         SPLIT_VALID_PCT,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    # r16: the window explode + md5 bucketing ran on the single-task
-    # fixture scan; input-sized exchange (interleaved A/B at sf0.1: med
-    # 1.63 → 1.13 s, identical rows), width 0 at corpus scale.
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    # the window explode + md5 bucketing run on a scan spread per
+    # tables.input_sized_width
+    docs = load_table(spark, sf_dir, "documents", spread_bytes=64 << 10)
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint") % 100
@@ -807,45 +804,6 @@ EXACT_SUBSTRING_SQL = _exact_substring_sql()
 # --- SimHash ----------------------------------------------------------------
 
 
-def _simhash_exchange_width(spark: SparkSession, sf_dir: str) -> int:
-    """Exchange width ahead of simhash's word explode, derived from INPUT
-    SIZE, not core count (r16, VERDICT r15 task 2). The r15 bare
-    ``defaultParallelism`` width was the round's one driver-confirmed
-    regression: fanning 5k tiny rows over 32 tasks costs more exchange
-    than it buys md5 parallelism. Interleaved same-session A/B on a quiet
-    window (steal ≤0.1%, 6 reps each, rotated order) re-measured the
-    whole curve at sf0.1: width 0 → 1.44–1.56 s, 4 → 1.08–1.25 s,
-    **8 → 0.94–0.99 s**, 16 → 0.91–1.26 s, 32 → 1.15–1.75 s. Policy:
-    ~64 KB of on-disk text per task (sf0.1's 594 KB → width 9 ≈ the
-    measured optimum), capped at defaultParallelism, and NO exchange at
-    all once the scan itself provides ≥ core-count splits (at corpus
-    scale re-shuffling the text payload is pure waste — the splits give
-    the parallelism; guide §2.2/§2.5). ``SPARK_GRAFT_SIMHASH_WIDTH``
-    overrides for A/B adjudication (0/1 disables the exchange)."""
-    raw = os.environ.get("SPARK_GRAFT_SIMHASH_WIDTH")
-    if raw is not None:
-        return max(0, int(raw))
-    cores = spark.sparkContext.defaultParallelism
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(path):
-            parts = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if len(parts) >= cores:
-                return 0  # the scan alone spreads the md5 work
-            nbytes = sum(os.path.getsize(p) for p in parts)
-        else:
-            nbytes = os.path.getsize(path)
-    except OSError:
-        return 0  # non-local storage: scan splits provide parallelism
-    if nbytes // (128 << 20) >= cores:
-        return 0
-    return min(cores, int(nbytes // (64 << 10)))
-
-
 def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash per document, grouped into duplicate buckets.
 
@@ -861,14 +819,12 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, bit)-keyed shuffle disappears entirely (guide §2.3/§2.4). The
     (doc_id, text) exchange ahead of the word explode spreads the
     md5-per-word work off the fixture's single-row-group scan — its
-    width is INPUT-SIZED, capped at core count, and dropped entirely
-    once the scan has core-count splits (r16 re-adjudication; see
-    _simhash_exchange_width for the measured curve) — and the downstream
-    doc-keyed aggregate reuses its partitioning, so it adds no extra
-    shuffle locally either."""
+    width is ``tables.input_sized_width`` — and the downstream doc-keyed
+    aggregate reuses its partitioning, so it adds no extra shuffle
+    locally either."""
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
-    n_part = _simhash_exchange_width(spark, sf_dir)
+    n_part = tables.input_sized_width(spark, sf_dir, "documents", 64 << 10)
     if n_part > 1:
         base = base.repartition(n_part, "doc_id")
     words = (
@@ -1605,16 +1561,13 @@ def minhash_index_build(spark: SparkSession, sf_dir: str) -> str:
     (similarity._materialize_cached): rebuilds are no-ops while source
     changes invalidate."""
     import hashlib
-    import os
     import tempfile
 
     from nano_vectordb_rs_spark.operators.similarity import _materialize_cached
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
+    src = ":".join(map(str, tables.table_key(sf_dir, "documents")))
     key = hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:"
-        f"mh{N_HASHES}b{N_BANDS}mod{NEW_MOD}v1".encode()
+        f"{src}:mh{N_HASHES}b{N_BANDS}mod{NEW_MOD}v1".encode()
     ).hexdigest()[:16]
     path = os.path.join(tempfile.gettempdir(), "nano_vdb_mh_index", key)
 

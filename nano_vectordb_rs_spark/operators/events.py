@@ -22,9 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from nano_vectordb_rs_spark.operators.relational import DEC
 from nano_vectordb_rs_spark.sources.tables import load_table
 
-DEC = "decimal(28,10)"
 HOUR_US = 3_600_000_000
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
 

@@ -61,6 +61,22 @@ def _make_list_array():
     return list_array
 
 
+def _make_keep_topk():
+    """Indices of every score ≥ the k-th largest (nested-def for by-value
+    pickling, see _make_batch_matrix). Rows tying the k-th score all
+    survive: the final ORDER BY breaks those ties by id, so dropping one
+    in a per-batch pre-reduction could drop the exact answer."""
+
+    def keep_topk(scores: np.ndarray, k: int) -> np.ndarray:
+        n = len(scores)
+        if n <= k:
+            return np.arange(n)
+        kth = np.partition(scores, n - k)[n - k]
+        return np.flatnonzero(scores >= kth)
+
+    return keep_topk
+
+
 batch_matrix = _make_batch_matrix()
 list_array = _make_list_array()
 
@@ -134,7 +150,7 @@ def topk_over(
     out_schema = ", ".join(
         [f"`{c}` {in_types[c].dataType.simpleString()}" for c in keep] + ["score double"]
     )
-    batch_matrix = _make_batch_matrix()
+    batch_matrix, keep_topk = _make_batch_matrix(), _make_keep_topk()
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -144,14 +160,7 @@ def topk_over(
                 norms = np.sqrt(np.einsum("ij,ij->i", mat, mat, dtype=np.float32))
                 np.maximum(norms, np.float32(1e-30), out=norms)
                 scores = scores / norms
-            if len(scores) > k:
-                # every row tying the batch's k-th score survives: the
-                # final ORDER BY breaks those ties by id, so dropping one
-                # here could drop the exact answer
-                kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-                idx = np.flatnonzero(scores >= kth)
-            else:
-                idx = np.arange(len(scores))
+            idx = keep_topk(scores, k)
             order = pa.array(idx.astype(np.int64))
             cols = [batch.column(c).take(order) for c in keep]
             cols.append(pa.array(scores[idx].astype(np.float64)))
@@ -194,7 +203,7 @@ def knn_join_fast(
     q_ids = np.array([r["vec_id"] for r in qrows])
     q_mat = np.vstack([np.asarray(r["embedding"], dtype=np.float32) for r in qrows])
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    batch_matrix = _make_batch_matrix()
+    batch_matrix, keep_topk = _make_batch_matrix(), _make_keep_topk()
 
     def score_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -208,15 +217,14 @@ def knn_join_fast(
             for qi in range(sims.shape[1]):
                 col = sims[:, qi]
                 mask = ids != q_ids[qi]
-                c_ids, c_labels, c_s = ids[mask], labels[mask], col[mask]
-                if len(c_s) > k:
-                    part = np.argpartition(-c_s, k)[:k]
-                else:
-                    part = np.arange(len(c_s))
+                c_ids, c_labels = ids[mask], labels[mask]
+                # pre-reduce on the score the final window ranks by
+                c_s = np.round(col[mask].astype(np.float64), 6)
+                part = keep_topk(c_s, k)
                 out_q.append(np.full(len(part), q_ids[qi], dtype=np.int64))
                 out_n.append(c_ids[part])
                 out_l.append(c_labels[part])
-                out_s.append(np.round(c_s[part].astype(np.float64), 6))
+                out_s.append(c_s[part])
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.concatenate(out_q)),

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nano_vectordb_rs_spark.functions.vector import EMBEDDING_DIM
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources.tables import load_table
 
 # --- sequence packing -------------------------------------------------------
 
@@ -645,18 +645,9 @@ def bigram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     count primitive (quality filters and decontamination both consume these).
     Explode is bounded per doc by its token count; the count aggregation
     shuffles once on (lang, bigram); the rank window runs per-language over
-    only each language's counted bigrams.
-
-    r16: the explode+partial-count ran entirely on the single-row-group
-    fixture scan's ONE task; an input-sized exchange spreads it
-    (interleaved A/B at sf0.1: med 1.26 → 0.81 s, results identical —
-    counts are exact integers). input_sized_width returns 0 once the scan
-    has core-count splits, so at corpus scale no exchange is added
-    (guide §2.2/§2.5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    only each language's counted bigrams. The explode and partial count
+    run on a scan spread per ``tables.input_sized_width``."""
+    docs = load_table(spark, sf_dir, "documents", spread_bytes=64 << 10)
     # bind the token array once per row (re-splitting inside the lambda
     # would be O(tokens²) in characters); guard single-token docs: Spark's
     # sequence(1, 0) yields a DESCENDING [1, 0] (step auto-negates), not

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources.tables import load_table
 
 DEC = "decimal(28,10)"
 
@@ -46,27 +46,16 @@ def tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One pass over lineitem; Catalyst pushes the shipdate filter into the
     Parquet scan; partial aggregation means the shuffle carries only
-    (flag,status) groups — 6 rows regardless of input size.
-
-    r16: when the scan has fewer splits than cores (the single-row-group
-    fixture → ONE task), the eight decimal aggregates serialize onto one
-    core; an input-sized round-robin exchange of the projected measures
-    spreads them (interleaved width sweep at sf0.1, rotated order:
-    width 0 → 1.24/1.52 s min/med, 8 → 0.97/1.03, 16 → 0.91/1.22,
-    32 → 0.92/0.99; results asserted identical — decimal addition is
-    exactly associative, so partial/final re-splits cannot change a sum).
-    input_sized_width returns 0 once the scan provides core-count splits,
-    so at corpus scale the exchange vanishes (guide §2.2/§2.5)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
+    (flag,status) groups — 6 rows regardless of input size. The scan is
+    spread per ``tables.input_sized_width`` (decimal sums are exactly
+    associative, so re-splitting cannot change them)."""
+    # the spread sits BETWEEN the scan and the decimal projection (Catalyst
+    # pushes the filter below it): the casts/products are the expensive
+    # per-row work, so they must run on the exchange's output, not on the
+    # single scan task
+    li = load_table(spark, sf_dir, "lineitem", spread_bytes=1 << 20).filter(
         F.col("l_shipdate") <= F.lit(Q1_CUTOFF).cast("timestamp_ntz")
     )
-    # the exchange sits BETWEEN the scan and the decimal projection: the
-    # casts/products are the expensive per-row work, so they must run on
-    # the exchange's output, not on the single scan task (placing the
-    # exchange after `pre` measured 1.6 s — no better than none)
-    w = input_sized_width(spark, sf_dir, "lineitem", 1 << 20)
-    if w > 1:
-        li = li.repartition(w)
     # pre-project the five decimal measures once per row — leaving the casts
     # and products inside agg() re-evaluates them per aggregate expression
     # (codegen subexpression elimination does not fully collapse them;

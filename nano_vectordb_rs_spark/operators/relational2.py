@@ -38,17 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nano_vectordb_rs_spark.operators.relational import DEC, _as_dbl, _dsum
 from nano_vectordb_rs_spark.sources.tables import load_table
-
-DEC = "decimal(28,10)"
-
-
-def _dsum(expr: str) -> F.Column:
-    return F.sum(F.expr(expr).cast(DEC))
-
-
-def _as_dbl(c: F.Column) -> F.Column:
-    return c.cast("double")
 
 
 # --- q8: national market share ----------------------------------------------

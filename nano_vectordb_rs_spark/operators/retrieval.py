@@ -36,7 +36,7 @@ from nano_vectordb_rs_spark.functions.vector import (
     cosine_expr,
     duck_cosine_lit,
 )
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources.tables import load_table
 
 QUERY_TERMS = ["spark", "merge", "window"]  # fixture-vocabulary keyword query
 BM25_K1 = 1.2
@@ -58,18 +58,9 @@ def lexical_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = Σ_t idf_r(t) · tf·(k1+1) / (tf + k1·(1 − b + b·len/avglen))
     with rational idf_r = (N − df + ½)/(df + ½). All inputs are integers or
     fixed literals and every division is written in the same order in both
-    engines, so scores are bit-identical; round(·, 6) on top.
-
-    r16: both legs (the df/len consts aggregate and the per-row BM25
-    scoring, each several full-text splits per row) ran on the
-    single-row-group fixture scan's ONE task; an input-sized exchange
-    spreads them (interleaved A/B at sf0.1 through hybrid_search_rrf:
-    med 1.36 → 0.99 s, results identical — consts are exact integer sums,
-    scores are per-row). Width 0 at corpus scale (guide §2.2/§2.5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    engines, so scores are bit-identical; round(·, 6) on top. Both legs
+    run on a scan spread per ``tables.input_sized_width``."""
+    docs = load_table(spark, sf_dir, "documents", spread_bytes=64 << 10)
     consts = docs.agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).alias("sum_len"),

@@ -43,7 +43,7 @@ from nano_vectordb_rs_spark.functions.vector import (
     norm_expr,
 )
 from nano_vectordb_rs_spark.operators.knn import KNN_TOPK_SQL
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
+from nano_vectordb_rs_spark.sources.tables import load_table, table_key
 
 N_QUERIES = 20  # knn_join query block: vec_id < 20
 JOIN_K = 5
@@ -98,19 +98,12 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     A single-level window on query_id alone clusters ALL corpus×|Q| scored
     rows into |Q| partitions — a parallelism ceiling of 20 and a skew magnet
     at 100× scale (the SQL analogue of fastknn.knn_join_fast's per-batch
-    argpartition, which pins the same result on the Arrow path). The
+    pre-reduction, which pins the same result on the Arrow path). The
     pre-rank keeps a superset of every global top-k, so results are
-    bit-identical to the one-window formulation the oracle runs.
-
-    r16: with the query block broadcast there is NO exchange below the
-    pre-rank, so the whole corpus × |Q| scoring ran on the single-row-
-    group fixture scan's one task; an input-sized exchange spreads it
-    (interleaved A/B at sf0.1: med 1.52 → 0.99 s, identical rows).
-    Width 0 once the scan has core-count splits (guide §2.2/§2.5)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    uw = input_sized_width(spark, sf_dir, "embeddings", 64 << 10)
-    if uw > 1:
-        emb = emb.repartition(uw)
+    bit-identical to the one-window formulation the oracle runs. With the
+    query block broadcast there is no exchange below the pre-rank, so the
+    scan is spread per ``tables.input_sized_width``."""
+    emb = load_table(spark, sf_dir, "embeddings", spread_bytes=64 << 10)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
@@ -195,7 +188,7 @@ N_DUP_PROBE = 4
 NEAR_DUP_MAX_BLOCK = 512
 NEAR_DUP_BANDS = 4
 
-#: (source path, mtime, size) -> max (label, cell) block size — the guard
+#: tables.table_key(embeddings) -> max (label, cell) block size — the guard
 #: decision is a property of the corpus, and near_dup_embeddings +
 #: crossmodal_dup_check both build the candidate engine in one job; caching
 #: saves the second count-agg per session
@@ -203,12 +196,8 @@ _MAX_BLOCK_CACHE: dict[tuple, int] = {}
 
 
 def _max_block_size(spark: SparkSession, sf_dir: str, assign: DataFrame) -> int:
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
     try:
-        st = os.stat(src)
-        key = (os.path.abspath(src), st.st_mtime_ns, st.st_size)
+        key = table_key(sf_dir, "embeddings")
     except OSError:
         key = None
     if key is not None and key in _MAX_BLOCK_CACHE:
@@ -1060,12 +1049,8 @@ def pq_build_codes(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:"
-        f"pq{PQ_M}x{PQ_K}v1".encode()
-    ).hexdigest()[:16]
+    src = ":".join(map(str, table_key(sf_dir, "embeddings")))
+    key = hashlib.md5(f"{src}:pq{PQ_M}x{PQ_K}v1".encode()).hexdigest()[:16]
     path = os.path.join(tempfile.gettempdir(), "nano_vdb_pq_codes", key)
 
     def _write(tmp: str) -> None:
@@ -1262,11 +1247,9 @@ def ivf_pq_build_index(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
+    src = ":".join(map(str, table_key(sf_dir, "embeddings")))
     key = hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:"
-        f"ivf{N_CENTROIDS}pq{PQ_M}x{PQ_K}v1".encode()
+        f"{src}:ivf{N_CENTROIDS}pq{PQ_M}x{PQ_K}v1".encode()
     ).hexdigest()[:16]
     path = os.path.join(tempfile.gettempdir(), "nano_vdb_ivfpq_index", key)
 
@@ -1294,14 +1277,9 @@ def _ivf_pq_read_schema(spark: SparkSession, sf_dir: str):
     8×16 HOF encode folds, ~4 s of driver-side Catalyst work — fine once,
     not per probe call (the r08 derived-schema change initially paid it
     every call and the scale probe caught the 0.4 → 4.7 s regression)."""
-    import os as _os
-
-    # content key (abspath + mtime + size), matching _materialize_cached's
-    # convention: a fixture regenerated at the same path with different
+    # content key: a fixture regenerated at the same path with different
     # column types must miss the cache, not serve a stale schema
-    src = _os.path.abspath(_os.path.join(sf_dir, "embeddings.parquet"))
-    st = _os.stat(src)
-    key = (src, st.st_mtime_ns, st.st_size)
+    key = table_key(sf_dir, "embeddings")
     if key not in _IVF_PQ_SCHEMA_CACHE:
         from pyspark.sql.types import StructType
 

@@ -10,8 +10,6 @@ parallel with a tiny shuffle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,9 +19,8 @@ from nano_vectordb_rs_spark.functions.text import (
     occurrences,
     predicted_lang_case,
 )
-from nano_vectordb_rs_spark.sources.tables import input_sized_width, load_table
-
-DEC = "decimal(28,10)"
+from nano_vectordb_rs_spark.operators.relational import DEC
+from nano_vectordb_rs_spark.sources.tables import _table_size, load_table
 
 
 # --- token counting ---------------------------------------------------------
@@ -69,15 +66,9 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram-marker language ID: per-language marker-occurrence scores →
     argmax with deterministic tie-break → confusion counts vs the labeled
     ``lang`` column. (Heuristic, deliberately cheap: three substring counts
-    per language, all scan-local.)
-
-    r16: "cheap" × 15 markers still serialized on the single-task fixture
-    scan; input-sized exchange, med 0.63 → 0.48 s (interleaved A/B,
-    identical rows), width 0 at corpus scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    per language, all scan-local.) The scan is spread per
+    ``tables.input_sized_width``."""
+    docs = load_table(spark, sf_dir, "documents", spread_bytes=64 << 10)
     scored = docs.select(
         "lang",
         *[
@@ -140,16 +131,9 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword ratio → a [0,1]-ish score; aggregated per (lang, source-bucket).
 
     Every intermediate is integer or a per-row double op, the aggregate goes
-    through DECIMAL — hash-stable at any parallelism.
-
-    r16: input-sized exchange off the single-task fixture scan (med
-    0.52 → 0.47 s, interleaved A/B, identical rows — the docstring's
-    "hash-stable at any parallelism" is exactly the license); width 0 at
-    corpus scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    through DECIMAL — hash-stable at any parallelism, so the scan is
+    spread per ``tables.input_sized_width``."""
+    docs = load_table(spark, sf_dir, "documents", spread_bytes=64 << 10)
     return (
         docs.select("lang", quality_col().alias("q"))
         .groupBy("lang")
@@ -215,16 +199,10 @@ DUCK_SHINGLE_FP_EXPR = (
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 4-word-shingle fingerprint (winnowing-lite): the minimum md5
     over a doc's shingles is its fingerprint; report per-source distinct
-    fingerprints + a deterministic sample of fingerprint prefixes.
-
-    r16: the per-shingle md5 chain ran on the single-row-group scan's ONE
-    task; an input-sized exchange spreads it (interleaved A/B at sf0.1:
-    med 0.90 → 0.56 s, identical rows). Width 0 at corpus scale — see
-    input_sized_width (guide §2.2/§2.5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    fingerprints + a deterministic sample of fingerprint prefixes. The
+    per-shingle md5 chain runs on a scan spread per
+    ``tables.input_sized_width``."""
+    docs = load_table(spark, sf_dir, "documents", spread_bytes=64 << 10)
     # bind split() ONCE as a column: Catalyst cannot CSE a subexpression into
     # a lambda body, so inlining split(text) there would re-tokenize the whole
     # document for every shingle term — O(words²) instead of O(words)
@@ -739,23 +717,6 @@ COLLOC_TOP = 15
 CHECKPOINT_MIN_TEXT_BYTES = 64 << 20
 
 
-def _documents_bytes(sf_dir: str) -> int:
-    """On-disk size of the documents table; 'unknown' (object store paths,
-    missing files) reads as LARGE so cluster deployments keep the
-    checkpointed single-derivation form."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return 1 << 40
-
-
 def phrase_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase detection via association lift — the word2phrase primitive
     training pipelines run before tokenizer/vocab construction: bigrams that
@@ -800,7 +761,10 @@ def phrase_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "word")
         .agg(F.count("*").alias("c_w"))
     )
-    if _documents_bytes(sf_dir) >= CHECKPOINT_MIN_TEXT_BYTES:
+    # unknown size (object store, missing files) reads as large, so
+    # cluster deployments keep the checkpointed single-derivation form
+    size = _table_size(sf_dir, "documents")
+    if size is None or size[1] >= CHECKPOINT_MIN_TEXT_BYTES:
         uni = uni.localCheckpoint(eager=False)
     totals = uni.groupBy("lang").agg(F.sum("c_w").alias("n_total"))
 
@@ -909,16 +873,9 @@ def pii_scrub_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: scan-local projection (concat + two regexp_replace + md5)
     followed by one source-keyed aggregation whose checksum is a
     commutative SUM (map-side combines; O(1) state per key — the same
-    mergeable-checksum trick as events_props_scrub).
-
-    r16: that projection ran on the single-row-group fixture scan's ONE
-    task; an input-sized exchange spreads the regex work (interleaved
-    A/B at sf0.1: med 0.64 → 0.45 s, results identical — the checksum is
-    a commutative sum). Width 0 at corpus scale (guide §2.2/§2.5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    uw = input_sized_width(spark, sf_dir, "documents", 64 << 10)
-    if uw > 1:
-        docs = docs.repartition(uw)
+    mergeable-checksum trick as events_props_scrub). The regex work runs
+    on a scan spread per ``tables.input_sized_width``."""
+    docs = load_table(spark, sf_dir, "documents", spread_bytes=64 << 10)
     idc = F.col("doc_id")
     email_sfx = F.when(
         idc % 13 == 0,

@@ -34,6 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from nano_vectordb_rs_spark.operators.relational import DEC
+from nano_vectordb_rs_spark.sources.tables import load_table
+
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, same as the batch twin
 
 #: sf_dir -> events schema. METADATA memo, not a result cache: the footer
@@ -53,9 +56,7 @@ def events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     per directory — guide §1.2: don't recompute what cannot change)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if sf_dir not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[sf_dir] = spark.read.parquet(
-            f"{sf_dir}/events.parquet"
-        ).schema
+        _SCHEMA_CACHE[sf_dir] = load_table(spark, sf_dir, "events").schema
     return _SCHEMA_CACHE[sf_dir]
 
 
@@ -279,6 +280,11 @@ def dedup_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataFr
     )
 
 
+#: state-store partition count of every availableNow drain (see
+#: run_available_now)
+STREAM_PARTITIONS = 2
+
+
 def run_available_now(
     stream_df: DataFrame,
     query_name: str,
@@ -295,9 +301,8 @@ def run_available_now(
     state+commit file per partition per micro-batch — at local drain scale
     that per-partition file overhead dominates the actual state work (the
     stream-stream join alone keeps four state stores). So the drain
-    harness starts the query under a small fixed count
-    (SPARK_GRAFT_STREAM_PARTITIONS, default 2) and restores the session
-    setting afterwards. A production deployment sizes this to its
+    harness starts the query under STREAM_PARTITIONS (2) and restores the
+    session setting afterwards. A production deployment sizes this to its
     executor count ONCE at query birth — it is a deployment parameter, not
     plan logic, which is why it lives here in the harness.
 
@@ -316,17 +321,12 @@ def run_available_now(
     drains agree (hourly 2.36 → 1.99, dedup 3.19 → 3.01, sessionize
     within noise) — 2 keeps state keyed across >1 store while shedding
     another ~0.4 s of per-partition file churn at drain scale."""
-    import os
-
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_ndmb = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "2"),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_PARTITIONS))
     # r16 drain decomposition (recentProgress durationMs, warm runs): the
     # dedup and interval-join drains each ran a ZERO-ROW final micro-batch
     # costing 1.3-1.8 s — almost all of it state-store commit time (up to
@@ -369,8 +369,6 @@ _DATA_BATCHES: dict[str, int] = {}
 
 
 # --- declared driver-gate query ---------------------------------------------
-
-DEC = "decimal(28,10)"
 
 
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -67,3 +67,26 @@ def test_topk_over_keeps_ties_at_batch_kth_score(spark):
     ).coalesce(1)
     got = topk_over(df, [1.0, 0.0], k=1).collect()
     assert [r["__id__"] for r in got] == ["a"]
+
+
+def test_join_fast_keeps_ties_at_batch_kth_score(spark, tmp_path):
+    # one Arrow batch: query 0 scores 0.5 against id 3 and 0.9 against ids
+    # 2 and 1; the k=1 answer under score DESC, neighbor_id ASC is id 1
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([0, 3, 2, 1], pa.int64()),
+                "embedding": pa.array(
+                    [[1.0, 0.0], [0.5, 0.75**0.5], [0.9, 0.19**0.5], [0.9, 0.19**0.5]],
+                    pa.list_(pa.float32()),
+                ),
+                "label": pa.array([0, 0, 0, 0], pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    got = knn_join_fast(spark, str(tmp_path), n_queries=1, k=1).collect()
+    assert [(r["query_id"], r["neighbor_id"]) for r in got] == [(0, 1)]

@@ -19,11 +19,14 @@ from __future__ import annotations
 import datetime
 import hashlib
 import math
+import re
 
 import numpy as np
 import pytest
 
 import __spark_entry__ as entry_mod
+from nano_vectordb_rs_spark.plans.audit import audit_plan, plan_string
+from nano_vectordb_rs_spark.sources import tables
 from tests.conftest import SF_DIR
 
 _UNHASHABLE = (list, tuple, dict, set, np.ndarray)
@@ -97,11 +100,8 @@ def _hash_frame(df):
 QUERY_KEYS = sorted(entry_mod.queries().keys())
 
 
-@pytest.mark.parametrize("name", QUERY_KEYS)
-def test_query_matches_oracle(spark, duck, name):
-    q = entry_mod.queries()[name]
+def _assert_matches_oracle(duck, name, sdf):
     oracles = entry_mod.oracle_sql()
-    sdf = q(spark, SF_DIR)
     spdf = sdf.toPandas()
 
     # list-typed Spark output crashes the driver canonicalizer even for
@@ -140,6 +140,39 @@ def test_query_matches_oracle(spark, duck, name):
         raise AssertionError(
             f"{name}: value hash mismatch\nspark: {s_sorted}\nduck : {d_sorted}"
         )
+
+
+@pytest.mark.parametrize("name", QUERY_KEYS)
+def test_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(duck, name, entry_mod.queries()[name](spark, SF_DIR))
+
+
+# queries that spread their scan per tables.input_sized_width; at sf0.001
+# every width but knn_join's is 0, so this test forces the spread
+SPREAD_QUERIES = [
+    "tpch_q1_pricing",
+    "lang_id",
+    "quality_scores",
+    "doc_fingerprints",
+    "pii_scrub_report",
+    "bigram_stats",
+    "lexical_search_docs",
+    "exact_substring_contamination",
+    "knn_join",
+    "simhash_docs",
+]
+
+
+@pytest.mark.parametrize("name", SPREAD_QUERIES)
+def test_forced_spread_matches_oracle(spark, duck, monkeypatch, name):
+    monkeypatch.setattr(tables, "input_sized_width", lambda *args: 3)
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
+    _assert_matches_oracle(duck, name, sdf)
+    if name == "simhash_docs":
+        plan = plan_string(sdf)
+        assert re.search(r"Exchange hashpartitioning\(doc_id#\d+L, 3\)", plan)
+    else:
+        assert audit_plan(sdf)["n_round_robin"] >= 1
 
 
 def test_entry_smoke(spark):

@@ -8,12 +8,17 @@ notices.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 import __spark_entry__ as entry_mod
 from nano_vectordb_rs_spark.plans import audit_plan
 from tests.conftest import SF_DIR
+
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+SF0001_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 @pytest.fixture(scope="module")
@@ -422,11 +427,9 @@ def test_streaming_sessionize_state_partitions_bounded(spark):
     """The sessionize drain must run its stateful exchange under the
     harness's small fixed partition count, not the session's 32 — state
     files per micro-batch scale with this number."""
-    import os
-
     from nano_vectordb_rs_spark.streaming import events_stream
 
-    want = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "2"))
+    want = events_stream.STREAM_PARTITIONS
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     out = events_stream.streaming_sessionize_custom(spark, SF_DIR)
     # session setting restored after the drain; the result is batch-local
@@ -586,22 +589,21 @@ def test_tpch_q2_one_window_shuffle_broadcast_dims(spark, queries):
     assert any("p_size" in p for p in a["pushed_filters"])
 
 
-def test_simhash_exchange_width_is_input_sized(spark, monkeypatch):
-    """r16 (VERDICT r15 task 2): the pre-explode exchange width derives
-    from input bytes (~64 KB/task), caps at core count, and disappears
-    for tiny or non-local inputs — never bare defaultParallelism (the
-    driver-confirmed r15 regression)."""
-    from nano_vectordb_rs_spark.operators import dedup
+def test_simhash_exchange_width_is_input_sized(spark):
+    """simhash's pre-explode exchange width derives from input bytes
+    (~64 KB/task), caps at core count, and disappears for tiny or
+    non-local inputs — never bare defaultParallelism."""
+    from nano_vectordb_rs_spark.sources.tables import input_sized_width
 
-    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_WIDTH", "5")
-    assert dedup._simhash_exchange_width(spark, "/root/testdata/sf0.1") == 5
-    monkeypatch.delenv("SPARK_GRAFT_SIMHASH_WIDTH")
-    w = dedup._simhash_exchange_width(spark, "/root/testdata/sf0.1")
+    def width(sf_dir):
+        return input_sized_width(spark, sf_dir, "documents", 64 << 10)
+
+    w = width(SF01_DIR)
     assert 1 < w <= spark.sparkContext.defaultParallelism
     # tiny fixture: below one 64 KB task's worth -> exchange elided
-    assert dedup._simhash_exchange_width(spark, "/root/testdata/sf0.001") == 0
+    assert width(SF0001_DIR) == 0
     # unreadable path (object store case): scan splits provide parallelism
-    assert dedup._simhash_exchange_width(spark, "/nonexistent") == 0
+    assert width("/nonexistent") == 0
 
 
 def test_phrase_collocations_checkpoint_gate(spark, monkeypatch):
@@ -610,10 +612,11 @@ def test_phrase_collocations_checkpoint_gate(spark, monkeypatch):
     through 8x), forced-large corpora take the checkpointed form, and both
     branches produce identical rows."""
     from nano_vectordb_rs_spark.operators import textops
+    from nano_vectordb_rs_spark.sources.tables import _table_size
 
-    assert textops._documents_bytes("/root/testdata/sf0.1") > 0
-    # unknown storage reads LARGE: clusters keep the single-derivation form
-    assert textops._documents_bytes("/nonexistent") == 1 << 40
+    assert _table_size(SF01_DIR, "documents")[1] > 0
+    # unknown storage (None) reads LARGE: clusters keep the single-derivation form
+    assert _table_size("/nonexistent", "documents") is None
     df_small = textops.phrase_collocations(spark, "/root/testdata/sf0.001")
     rows_small = sorted(map(str, df_small.collect()))
     monkeypatch.setattr(textops, "CHECKPOINT_MIN_TEXT_BYTES", 0)
