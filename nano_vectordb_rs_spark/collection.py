@@ -30,7 +30,7 @@ import json
 import math
 import os
 import shutil
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +48,10 @@ ID_COL = "__id__"
 METRICS_COL = "__metrics__"
 VECTOR_COL = "vector"
 _SIDECAR = "_additional_data.json"
+# Largest saved collection, in Parquet bytes, that query() serves from the
+# driver. Float vectors barely compress, so the driver holds about twice
+# this: the Arrow table plus the float32 matrix.
+_RESIDENT_MAX_BYTES = 256 << 20
 
 
 class DimensionError(ValueError):
@@ -65,12 +69,25 @@ class SnapshotInUseError(ValueError):
     while still surfacing real errors like a vanished version."""
 
 
+class _Resident(NamedTuple):
+    """A saved collection's Parquet files held on the driver for query()."""
+
+    table: Any  # pyarrow.Table in the Arrow form of the Spark schema
+    matrix: Any  # (rows, dim) float32 ndarray, column-major
+    ids: list[str]
+    schema: T.StructType  # the Spark path's result schema
+
+
 class VectorCollection:
     """A cosine-similarity vector collection backed by a lazy DataFrame.
 
     Mutations (upsert/delete) build new logical plans; nothing is persisted
     until ``save()`` — exactly the reference's in-memory-until-save contract
     (its tests call save() explicitly, tests/unit_tests.rs:28).
+
+    Until its next mutation, a handle serves the files it opened or last
+    saved. Writers are single-process by contract, so nothing rewrites
+    those files meanwhile, and ``query()`` may keep a copy on the driver.
     """
 
     def __init__(self, spark: SparkSession, embedding_dim: int, df: DataFrame, path: str | None):
@@ -90,6 +107,11 @@ class VectorCollection:
         # create); cleared by the first upsert. Purely an optimization flag:
         # False never changes behavior, it just runs the existing-ids probe.
         self._known_empty = False
+        # The DataFrame open()/save() read straight from Parquet, and the
+        # driver-resident copy of its files that query() serves from. Every
+        # mutation reassigns _df, so `_df is not _files_df` retires both.
+        self._files_df: DataFrame | None = None
+        self._resident: tuple[DataFrame, _Resident | None] | None = None
         if path and os.path.exists(os.path.join(path, _SIDECAR)):
             with open(os.path.join(path, _SIDECAR)) as f:
                 self._additional = json.load(f)
@@ -129,7 +151,9 @@ class VectorCollection:
             df = spark.read.parquet(path)
             if VECTOR_COL not in df.columns or ID_COL not in df.columns:
                 raise ValueError(f"not a collection: {path} lacks {ID_COL}/{VECTOR_COL}")
-            return cls(spark, embedding_dim, df, path)
+            col = cls(spark, embedding_dim, df, path)
+            col._files_df = df
+            return col
         col = cls(spark, embedding_dim, cls._empty_df(spark, metadata_schema), path)
         # freshly created ⇒ provably no rows: lets the first upsert skip the
         # existing-ids probe (one whole Spark job on the bulk-load path)
@@ -144,8 +168,12 @@ class VectorCollection:
         dim_ok = F.size(VECTOR_COL) == self.embedding_dim
         v = as_double_array(VECTOR_COL)
         norm = F.expr(norm_expr(v))
+        # 0 < norm < inf, query()'s rule: an infinite element makes the norm
+        # inf (normalizing then stores NaN) and a NaN one makes it NaN,
+        # which Spark orders above +inf, so both fail the upper bound
+        norm_ok = (norm > 0) & (norm < math.inf)
         if strict:
-            bad = batch.filter(~dim_ok | (norm <= 0) | F.isnan(norm)).limit(1).collect()
+            bad = batch.filter(~dim_ok | ~norm_ok).limit(1).collect()
             if bad:
                 row = bad[0]
                 if len(row[VECTOR_COL]) != self.embedding_dim:
@@ -160,7 +188,7 @@ class VectorCollection:
         # 100k×1024 micro (see fastknn.normalize_ml).
         from nano_vectordb_rs_spark.operators.fastknn import normalize_ml
 
-        return normalize_ml(batch.filter(dim_ok & (norm > 0)), VECTOR_COL)
+        return normalize_ml(batch.filter(dim_ok & norm_ok), VECTOR_COL)
 
     # -- O2: upsert ---------------------------------------------------------
 
@@ -208,15 +236,15 @@ class VectorCollection:
             ID_COL, "__batch_pos__", "__dim__", "__norm__"
         ).collect()
         for r in info:
-            # same per-row predicate the old limit(1) probe used:
-            # ~dim_ok | (norm <= 0) | isnan(norm), first offender raises
+            # same per-row rule as _validate_and_normalize, first
+            # offender raises
             if r["__dim__"] != self.embedding_dim:
                 raise DimensionError(
                     f"vector for id={r[ID_COL]!r} has dim {r['__dim__']}, "
                     f"expected {self.embedding_dim}"
                 )
             n = r["__norm__"]
-            if n is None or not (n > 0) or math.isnan(n):
+            if n is None or not 0 < n < math.inf:
                 raise ZeroVectorError(
                     f"zero/invalid-norm vector for id={r[ID_COL]!r}"
                 )
@@ -246,6 +274,7 @@ class VectorCollection:
         batch_clean = deduped.filter(
             (F.col("__dim__") == self.embedding_dim)
             & (F.col("__norm__") > 0)
+            & (F.col("__norm__") < math.inf)
         ).drop("__batch_pos__", "__dim__", "__norm__")
         # local id relation (typed like the batch id column): broadcasting
         # it costs no batch re-traversal in the probe or the merge plan
@@ -288,10 +317,10 @@ class VectorCollection:
         better_than: float | None = None,
         where: Column | str | None = None,
     ) -> DataFrame:
-        """The flagship pipeline (src/lib.rs:188-260) as a declarative plan:
+        """The flagship pipeline (src/lib.rs:188-260):
 
         filter(where) → score = dot(vector, normalize(q)) → score >= t →
-        ORDER BY score DESC, __id__ LIMIT k  (TakeOrderedAndProject).
+        ORDER BY score DESC, __id__ LIMIT k.
 
         ``where`` may be any Column predicate — the Spark generalization of the
         reference's DataFilter closure (src/lib.rs:112), but optimizable.
@@ -300,9 +329,22 @@ class VectorCollection:
         the stored float32 vector against the driver-normalized query. A
         query that is zero, non-finite or whose norm overflows raises
         ``ZeroVectorError`` before any Spark work: a NaN score would sort
-        above every real score and fill the top-k. The query travels as one
-        folded literal node (``folded_array_lit``): analyzing a literal with
-        one node per element was most of each call's plan-build time.
+        above every real score and fill the top-k.
+
+        Two paths give the same rows, score bits, tie order and schema:
+
+        * Resident: ``where`` is None and the handle's state is exactly the
+          Parquet files it opened or last saved, local and at most
+          ``_RESIDENT_MAX_BYTES``. The first such call reads those files
+          into a driver-resident float32 matrix; every call then scores all
+          rows in one vectorized pass and returns a local DataFrame, so it
+          runs no Spark job. On the Spark path the interpreted
+          ``zip_with``/``aggregate`` fold plus one job per call are most of
+          a serving call's time.
+        * Spark: everything else (a ``where``, unsaved mutations, larger or
+          non-local files), as one plan: scan → score →
+          TakeOrderedAndProject. The query travels as one folded literal
+          node (``folded_array_lit``).
         """
         if len(query_vector) != self.embedding_dim:
             raise DimensionError(
@@ -314,14 +356,108 @@ class VectorCollection:
             raise ZeroVectorError("zero, non-finite or overflowing query vector")
         q = [x / qnorm for x in query_vector]  # O3a, hoisted to the driver
 
+        if where is None and top_k >= 0:
+            resident = self._resident_state()
+            if resident is not None:
+                return self._resident_query(resident, q, top_k, better_than)
         df = self._df
         if where is not None:
             df = df.filter(where)
-        score = F.expr(dot_expr(VECTOR_COL, folded_array_lit(q)))
-        df = df.withColumn(METRICS_COL, score)
+        df = self._scored(df, q)
         if better_than is not None:
             df = df.filter(F.col(METRICS_COL) >= float(better_than))
         return df.orderBy(F.col(METRICS_COL).desc(), F.col(ID_COL).asc()).limit(top_k)
+
+    @staticmethod
+    def _scored(df: DataFrame, q: list[float]) -> DataFrame:
+        return df.withColumn(METRICS_COL, F.expr(dot_expr(VECTOR_COL, folded_array_lit(q))))
+
+    def _resident_state(self) -> _Resident | None:
+        """The driver-resident copy of this handle's files, read on the
+        first call that can use it; None when the state is not exactly the
+        files open()/save() read, or they cannot be served resident."""
+        df = self._df
+        if df is not self._files_df:
+            return None
+        if self._resident is None or self._resident[0] is not df:
+            self._resident = (df, self._read_resident(df))
+        return self._resident[1]
+
+    def _read_resident(self, df: DataFrame) -> _Resident | None:
+        """Read exactly the files ``df`` scans with pyarrow (not
+        ``toArrow()``, which runs a Spark job and is several times slower)."""
+        from urllib.parse import unquote, urlparse
+
+        import numpy as np
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        uris = [urlparse(u) for u in df.inputFiles()]
+        if not uris or any(u.scheme != "file" for u in uris):
+            return None
+        paths = [unquote(u.path) for u in uris]
+        if sum(os.path.getsize(p) for p in paths) > _RESIDENT_MAX_BYTES:
+            return None
+        # Cast to the Arrow form of the Spark schema: Spark's INT96
+        # timestamps read back naive, and this tags them UTC, which they
+        # are, whatever the session time zone.
+        table = (
+            pq.read_table(paths)
+            .select(df.columns)
+            .cast(to_arrow_schema(df.schema))
+            .combine_chunks()
+        )
+        vectors = table.column(VECTOR_COL).combine_chunks()
+        lengths = pc.list_value_length(vectors).to_numpy(zero_copy_only=False)
+        # the Spark path scores a NULL or wrong-length vector NULL and sorts
+        # a NULL id first: leave such collections to it
+        if (
+            vectors.null_count
+            or table.column(ID_COL).null_count
+            or (lengths != self.embedding_dim).any()
+        ):
+            return None
+        # the list column's flat buffer is the row-major matrix (see
+        # fastknn.batch_matrix); column-major makes each fold step contiguous
+        matrix = np.asfortranarray(
+            np.asarray(vectors.flatten(), dtype=np.float32).reshape(
+                len(vectors), self.embedding_dim
+            )
+        )
+        # NumPy and Spark order NULL and NaN scores differently. Ingest
+        # rejects such elements, but apply_changes replays a feed verbatim.
+        if not np.isfinite(matrix).all():
+            return None
+        schema = self._scored(df, [0.0] * self.embedding_dim).schema
+        return _Resident(table, matrix, table.column(ID_COL).to_pylist(), schema)
+
+    def _resident_query(
+        self, res: _Resident, q: list[float], top_k: int, better_than: float | None
+    ) -> DataFrame:
+        import numpy as np
+        import pyarrow as pa
+
+        from nano_vectordb_rs_spark.operators.fastknn import _make_keep_topk
+
+        # dot_expr's fold, one column at a time: s = 0.0, s += x_j * q_j,
+        # each float32 x_j widened exactly and every step rounded in double,
+        # as in the JVM. dtype= forces the double product.
+        n = res.matrix.shape[0]
+        scores, term = np.zeros(n), np.empty(n)
+        for j, qj in enumerate(q):
+            np.multiply(res.matrix[:, j], qj, out=term, dtype=np.float64)
+            scores += term
+        cand = np.arange(n)
+        if better_than is not None:
+            cand = np.flatnonzero(scores >= float(better_than))
+        cand = cand[_make_keep_topk()(scores[cand], top_k)] if top_k else cand[:0]
+        # Python str order is code-point order, which is Spark's UTF-8 byte order
+        rows = sorted(cand.tolist(), key=lambda i: (-scores[i], res.ids[i]))[:top_k]
+        out = res.table.take(pa.array(rows, pa.int64())).append_column(
+            METRICS_COL, pa.array(scores[rows], pa.float64())
+        )
+        return self.spark.createDataFrame(out, schema=res.schema)
 
     def query_batch(
         self,
@@ -465,7 +601,7 @@ class VectorCollection:
         if os.path.isdir(old):
             shutil.rmtree(old)
         self.path = path
-        self._df = self.spark.read.parquet(path)
+        self._df = self._files_df = self.spark.read.parquet(path)
 
     def compact(self, target_rows_per_file: int = 500_000) -> int:
         """Rewrite the collection into ``ceil(count / target)`` parquet files
@@ -557,7 +693,7 @@ class VectorCollection:
         # written immutable files instead of recomputing the whole merge
         # plan. Safe because snapshots are never deleted or overwritten —
         # a future retention API must re-point readers before reclaiming.
-        self._df = self.spark.read.parquet(target)
+        self._df = self._files_df = self.spark.read.parquet(target)
         manifest = os.path.join(root, "manifest.json")
         tmp = manifest + ".tmp"
         with open(tmp, "w") as f:

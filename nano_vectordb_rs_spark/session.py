@@ -31,10 +31,29 @@ def _default_driver_mem() -> str:
     return f"{max(2, min(32, int(total_gib // 4)))}g"
 
 
+def _local_cores(env_cpus: str | None, available: int) -> tuple[str, int]:
+    """``local[N]``'s N and the default shuffle partitions: the
+    ``SPARK_GRAFT_CPUS`` value when set, else the ``available`` cores.
+    A non-numeric setting (``*``) passes through to the master and leaves
+    the partitions at ``available``."""
+    cpus = env_cpus or str(available)
+    return cpus, int(cpus) if cpus.isdigit() else available
+
+
+def _available_cores() -> int:
+    """Cores this process may run on (its affinity mask, not the host's)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "nano-vectordb-rs-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, default_partitions = _local_cores(
+        os.environ.get("SPARK_GRAFT_CPUS"), _available_cores()
+    )
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = default_partitions
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -177,6 +177,20 @@ def test_zero_vector_rejected(spark, coll):
         coll.upsert(make_batch(spark, [("z", [0, 0, 0, 0], None)]))
 
 
+def test_non_finite_vectors_rejected_at_ingest(spark, coll):
+    # normalizing an infinite element stores NaN, and a NaN row ranks first
+    # in every query with __metrics__ = NaN
+    for bad in (math.inf, -math.inf, math.nan):
+        batch = make_batch(spark, [("ok", [0, 1, 0, 0], None), ("bad", [bad, 1, 0, 0], None)])
+        with pytest.raises(ZeroVectorError):
+            coll.upsert(batch)
+        kept = coll._validate_and_normalize(batch, strict=False).collect()
+        assert [r["__id__"] for r in kept] == ["ok"]
+        with pytest.raises(ZeroVectorError):
+            coll.query_batch(batch)
+    assert coll.count() == 0
+
+
 def test_dimension_mismatch_rejected(spark, coll):
     # Q4 decision: the reference silently corrupts row alignment (src/lib.rs:175)
     bad = spark.createDataFrame(

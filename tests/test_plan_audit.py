@@ -638,6 +638,7 @@ def test_input_sized_width_policy(spark):
 
 def test_collection_serving_calls_are_single_scans(spark, tmp_path):
     from nano_vectordb_rs_spark.collection import VectorCollection
+    from nano_vectordb_rs_spark.plans import plan_string
 
     c = VectorCollection.open(spark, 4, str(tmp_path / "coll"))
     c.upsert(
@@ -652,9 +653,20 @@ def test_collection_serving_calls_are_single_scans(spark, tmp_path):
     assert a["n_broadcasts"] == 0 and a["n_broadcast_joins"] == 0
     assert a["n_shuffles"] == 0
     assert any("__id__" in p for p in a["pushed_filters"])
-    # query: scan -> score -> bounded top-k, no exchange
-    a = audit_plan(c.query([1.0, 0.0, 0.0, 0.0], top_k=3))
+    # query on the Spark path (any where): scan -> score -> bounded top-k,
+    # no exchange
+    a = audit_plan(c.query([1.0, 0.0, 0.0, 0.0], top_k=3, where=F.lit(True)))
     assert a["has_take_ordered"] and a["n_shuffles"] == 0
+    # query on the saved handle is served resident: no job, no file scan
+    sc = spark.sparkContext
+    sc.setJobGroup("resident_query", "resident_query")
+    try:
+        top = c.query([1.0, 0.0, 0.0, 0.0], top_k=3)
+        assert len(top.collect()) == 3
+        assert list(sc.statusTracker().getJobIdsForGroup("resident_query")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "FileScan" not in plan_string(top)
 
 
 def test_round_robin_exchange_counted_apart_from_shuffles(spark):
