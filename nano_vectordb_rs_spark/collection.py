@@ -346,6 +346,8 @@ class VectorCollection:
           TakeOrderedAndProject. The query travels as one folded literal
           node (``folded_array_lit``).
         """
+        if top_k < 0:
+            raise ValueError(f"top_k must be >= 0, got {top_k}")
         if len(query_vector) != self.embedding_dim:
             raise DimensionError(
                 f"query dim {len(query_vector)} != collection dim {self.embedding_dim}"
@@ -356,7 +358,7 @@ class VectorCollection:
             raise ZeroVectorError("zero, non-finite or overflowing query vector")
         q = [x / qnorm for x in query_vector]  # O3a, hoisted to the driver
 
-        if where is None and top_k >= 0:
+        if where is None:
             resident = self._resident_state()
             if resident is not None:
                 return self._resident_query(resident, q, top_k, better_than)
@@ -476,6 +478,8 @@ class VectorCollection:
         Returns (query_id, __id__, metadata..., __metrics__, rank)."""
         from pyspark.sql.window import Window
 
+        if top_k < 0:
+            raise ValueError(f"top_k must be >= 0, got {top_k}")
         qnorm = self._validate_and_normalize(queries).select(
             F.col(ID_COL).alias("__query_id__"),
             F.col(VECTOR_COL).alias("__query_vec__"),

@@ -90,24 +90,6 @@ def folded_array_lit(values: list[float]) -> str:
     return f"from_json('{json.dumps(values)}', 'array<double>')"
 
 
-def normalize_expr(a: str) -> str:
-    """Unit-normalize an array<double> expression (caller guards zero norm per Q5).
-
-    The norm is bound ONCE per row via ``array_repeat`` (evaluated a single
-    time, then zipped element-wise). Inlining ``norm_expr`` inside the
-    ``transform`` lambda instead would re-evaluate the full O(dim) aggregate
-    per ELEMENT — O(dim^2) per row, catastrophic at dim=1024."""
-    return f"zip_with({a}, array_repeat({norm_expr(a)}, size({a})), (x, n) -> x / n)"
-
-
-def normalized_col(vec_col: str) -> Column:
-    return F.expr(normalize_expr(as_double_array(vec_col)))
-
-
-def l2_norm_col(vec_col: str) -> Column:
-    return F.expr(norm_expr(as_double_array(vec_col)))
-
-
 def qcol(name: str) -> Column:
     """Column by LITERAL name: backtick-quoted so a user metadata column
     containing '.' (or '`') resolves as itself, never as a struct path —

@@ -227,9 +227,9 @@ def normalize_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def duck_like_renorm_spark() -> str:
     # norm of the normalized vector: dot(n, n) where n = v / |v|. The norm
-    # is bound once per row via array_repeat+zip_with (normalize_expr's
-    # pattern) — inlining norm_expr in the divide lambda would re-fold the
-    # whole vector per ELEMENT, O(dim²) per row
+    # is bound once per row via array_repeat+zip_with — inlining norm_expr
+    # in the divide lambda would re-fold the whole vector per ELEMENT,
+    # O(dim²) per row
     v = as_double_array("embedding")
     n = f"zip_with({v}, array_repeat({norm_expr(v)}, size({v})), (x, m) -> x / m)"
     return f"aggregate(zip_with({n}, {n}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"

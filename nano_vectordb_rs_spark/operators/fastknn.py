@@ -81,28 +81,6 @@ batch_matrix = _make_batch_matrix()
 list_array = _make_list_array()
 
 
-def normalize_map_in_arrow(df: DataFrame, vec_col: str = "vector") -> DataFrame:
-    """Unit-L2 normalize (O12) on the Arrow path: one vectorized pass per
-    batch. Scan-local — no shuffle; schema is preserved."""
-    schema = df.schema
-    names = [f.name for f in schema.fields]
-    batch_matrix, list_array = _make_batch_matrix(), _make_list_array()
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            mat = batch_matrix(batch, vec_col)
-            norms = np.sqrt(np.einsum("ij,ij->i", mat, mat, dtype=np.float32))
-            np.maximum(norms, np.float32(1e-30), out=norms)  # Q5 zero-guard
-            mat = mat / norms[:, None]
-            cols = [
-                list_array(mat) if name == vec_col else batch.column(name)
-                for name in names
-            ]
-            yield pa.RecordBatch.from_arrays(cols, names)
-
-    return df.mapInArrow(gen, schema)
-
-
 def normalize_ml(df: DataFrame, vec_col: str = "vector") -> DataFrame:
     """Unit-L2 normalize (O12) entirely JVM-side: ``array_to_vector`` →
     MLlib ``Normalizer`` (a Scala loop over the dense values — no Python
@@ -110,11 +88,10 @@ def normalize_ml(df: DataFrame, vec_col: str = "vector") -> DataFrame:
 
     Numerics match the collection's HOF write path bit-for-bit: both
     promote float→double, take a left-to-right double sum of squares,
-    divide in double, and truncate the quotient to float32 (the Arrow path
-    above differs by ≤1 ulp because its einsum norm stays in float32, the
-    reference's f32 semantic). Measured on the 100k×1024 micro: ~0.51 s vs
-    ~0.63 s for the Arrow hop — the 2×400 MB IPC transfer was the floor of
-    the old path, and this one never leaves the JVM."""
+    divide in double, and truncate the quotient to float32. Measured on the
+    100k×1024 micro: ~0.51 s vs ~0.63 s for a mapInArrow normalize, whose
+    floor was the 2×400 MB Arrow IPC transfer; this path never leaves the
+    JVM."""
     from pyspark.ml.feature import Normalizer
     from pyspark.ml.functions import array_to_vector, vector_to_array
 

@@ -577,7 +577,7 @@ def embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = f"array_max(transform(embedding, x -> abs({d})))"
     # bind the scale and the error array ONCE per row as projected columns —
     # inlining them in the downstream lambdas would re-evaluate the O(dim)
-    # array_max per ELEMENT (the normalize_expr O(dim²) trap)
+    # array_max per ELEMENT, O(dim²) per row
     s_expr = f"(127.0D / greatest({m}, 1e-30D))"
     err = f"transform(embedding, x -> {d} - CAST(floor({d} * s + 0.5D) AS DOUBLE) / s)"
     mse = f"aggregate(err, CAST(0.0 AS DOUBLE), (a, e) -> a + e * e) / {EMBEDDING_DIM}"

@@ -170,9 +170,10 @@ N_DUP_PROBE = 4
 
 # Scale guard for the candidate self-join: with a FIXED cell count, block
 # size grows ~N/cells, so candidate pairs Σ|block|² — and the exact-cosine
-# verifies they feed — grow QUADRATICALLY (measured before the guard:
-# scripts/scale_probe.py, 3.2 s → 18.2 s from 4x to 8x sf0.1; at 8x the 80
-# (label, cell) blocks held ~800 rows each and emitted ~25M verify pairs).
+# verifies they feed — grow QUADRATICALLY (measured before the guard on
+# self-unioned sf0.1 copies, 3.2 s → 18.2 s from 4x to 8x; at 8x the 80
+# (label, cell) blocks held ~800 rows each and emitted ~25M verify pairs;
+# SCALE_PROBE_8X.json records the guarded shape at 3.5 s → 4.3 s).
 # When the largest block exceeds NEAR_DUP_MAX_BLOCK rows, every block is
 # further split by NEAR_DUP_BANDS independent sign-LSH sub-keys (b
 # raw-dimension sign bits per band); a pair is a candidate if it matches

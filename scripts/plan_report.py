@@ -37,12 +37,14 @@ def main() -> None:
         f"Generated by `scripts/plan_report.py` at `{sf_dir}` "
         "(pre-execution AQE plans; see `nano_vectordb_rs_spark/plans/audit.py`).",
         "",
-        "Columns: shuffles = Exchange count; bcast = broadcast joins; "
-        "smj = sort-merge joins; topk = TakeOrderedAndProject (bounded "
-        "per-partition top-k); pushed = predicates reaching the Parquet scan.",
+        "Columns: shuffles = hash/range/single-partition Exchange count; "
+        "bcast = broadcast joins; smj = sort-merge joins; rr = "
+        "RoundRobinPartitioning Exchanges (keyless spreads, not in "
+        "shuffles); topk = TakeOrderedAndProject (bounded per-partition "
+        "top-k); pushed = predicates reaching the Parquet scan.",
         "",
-        "| query | shuffles | bcast | smj | topk | pushed filters |",
-        "|---|---|---|---|---|---|",
+        "| query | shuffles | bcast | smj | rr | topk | pushed filters |",
+        "|---|---|---|---|---|---|---|",
     ]
     for name in sorted(queries):
         if name in SKIP:
@@ -51,7 +53,8 @@ def main() -> None:
         pushed = "; ".join(a["pushed_filters"])[:90] or "—"
         lines.append(
             f"| {name} | {a['n_shuffles']} | {a['n_broadcast_joins']} "
-            f"| {a['n_sort_merge_joins']} | {'✓' if a['has_take_ordered'] else ''} "
+            f"| {a['n_sort_merge_joins']} | {a['n_round_robin']} "
+            f"| {'✓' if a['has_take_ordered'] else ''} "
             f"| {pushed} |"
         )
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")

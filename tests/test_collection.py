@@ -217,6 +217,18 @@ def test_query_dim_and_zero_query_guards(coll):
     for bad in (math.nan, math.inf, -math.inf):
         with pytest.raises(ZeroVectorError):
             coll.query([bad, 1.0, 0.0, 0.0])
+    # a negative top_k fails typed too, on the Spark and the resident path
+    # and in query_batch (which would otherwise return no rows)
+    batch = make_batch(coll.spark, [("a", [1, 0, 0, 0], None), ("b", [0, 1, 0, 0], None)])
+    with pytest.raises(ValueError, match="top_k"):
+        coll.query_batch(batch, top_k=-1)
+    coll.upsert(batch)
+    with pytest.raises(ValueError, match="top_k"):
+        coll.query([1.0, 0.0, 0.0, 0.0], top_k=-1)
+    coll.save()
+    saved = VectorCollection.open(coll.spark, DIM, coll.path, SCHEMA)
+    with pytest.raises(ValueError, match="top_k"):
+        saved.query([1.0, 0.0, 0.0, 0.0], top_k=-1)
 
 
 def test_threshold_boundary(spark, coll):

@@ -8,14 +8,12 @@ to each other (and transitively to the DuckDB oracle).
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from nano_vectordb_rs_spark.operators import knn
 from nano_vectordb_rs_spark.operators.fastknn import (
     knn_join_fast,
     knn_topk_fast,
-    normalize_map_in_arrow,
     topk_over,
 )
 from nano_vectordb_rs_spark.operators.similarity import JOIN_K, N_QUERIES, knn_join
@@ -44,18 +42,6 @@ def test_join_fast_matches_sql(spark):
     mismatches = sum(1 for k in sql if fast[k] != sql[k])
     # float32 rounding may flip near-tied neighbors at the rank boundary
     assert mismatches <= len(sql) // 20
-
-
-def test_normalize_arrow_unit_norms(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = normalize_map_in_arrow(emb, "embedding")
-    norm = F.expr(
-        "sqrt(aggregate(zip_with(embedding, embedding, (x, y) -> CAST(x AS DOUBLE) * y), "
-        "0D, (a, x) -> a + x))"
-    )
-    rows = out.select(F.max(F.abs(norm - 1.0)).alias("err")).collect()
-    assert rows[0]["err"] < 1e-5
-    assert out.count() == emb.count()
 
 
 def test_topk_over_keeps_ties_at_batch_kth_score(spark):
