@@ -70,12 +70,53 @@ class SnapshotInUseError(ValueError):
 
 
 class _Resident(NamedTuple):
-    """A saved collection's Parquet files held on the driver for query()."""
+    """A saved collection's Parquet files held on the driver, from which
+    ``query()`` (no ``where``, or an equality ``where``) and ``get()`` are
+    answered without a Spark job."""
 
     table: Any  # pyarrow.Table in the Arrow form of the Spark schema
     matrix: Any  # (rows, dim) float32 ndarray, column-major
     ids: list[str]
-    schema: T.StructType  # the Spark path's result schema
+    schema: T.StructType  # the Spark path's query() result schema
+    columns: dict[int, str]  # column name by its attribute's exprId
+
+
+# Column types whose Spark `=` is Arrow's `equal`. Floating point is not one:
+# Spark's `=` holds for NaN = NaN.
+_EQUALITY_TYPES = {"tinyint", "smallint", "int", "bigint", "string"}
+
+
+def _equality_terms(filtered: DataFrame) -> list[tuple[int, Any]] | None:
+    """The analyzed filter condition of ``filtered`` as ``(exprId, value)``
+    pairs when it is ``attribute = literal`` or an AND of such terms, each
+    attribute a top-level column of an ``_EQUALITY_TYPES`` type and each
+    literal non-null and of exactly that type; None for anything else (a
+    cast, an OR, a constant, a nested field, a float column, ...)."""
+    terms, todo = [], [filtered._jdf.queryExecution().analyzed().condition()]
+    while todo:
+        e = todo.pop()
+        if e.nodeName() == "And":
+            todo += [e.left(), e.right()]
+            continue
+        if e.nodeName() != "EqualTo":
+            return None
+        attr, lit = e.left(), e.right()
+        if attr.nodeName() == "Literal":
+            attr, lit = lit, attr
+        if attr.nodeName() != "AttributeReference" or lit.nodeName() != "Literal":
+            return None
+        t, value = attr.dataType(), lit.value()
+        if (
+            value is None
+            or t.catalogString() not in _EQUALITY_TYPES
+            or not t.equals(lit.dataType())
+        ):
+            return None
+        # a string literal arrives as a JVM UTF8String
+        terms.append(
+            (attr.exprId().id(), value if isinstance(value, int) else value.toString())
+        )
+    return terms
 
 
 class VectorCollection:
@@ -87,7 +128,8 @@ class VectorCollection:
 
     Until its next mutation, a handle serves the files it opened or last
     saved. Writers are single-process by contract, so nothing rewrites
-    those files meanwhile, and ``query()`` may keep a copy on the driver.
+    those files meanwhile, and the handle may keep a copy of them on the
+    driver: ``query()`` loads it and ``get()`` reuses it once loaded.
     """
 
     def __init__(self, spark: SparkSession, embedding_dim: int, df: DataFrame, path: str | None):
@@ -108,8 +150,9 @@ class VectorCollection:
         # False never changes behavior, it just runs the existing-ids probe.
         self._known_empty = False
         # The DataFrame open()/save() read straight from Parquet, and the
-        # driver-resident copy of its files that query() serves from. Every
-        # mutation reassigns _df, so `_df is not _files_df` retires both.
+        # driver-resident copy of its files that query() and get() serve
+        # from. Every mutation reassigns _df, so `_df is not _files_df`
+        # retires both.
         self._files_df: DataFrame | None = None
         self._resident: tuple[DataFrame, _Resident | None] | None = None
         if path and os.path.exists(os.path.join(path, _SIDECAR)):
@@ -204,7 +247,7 @@ class VectorCollection:
         never O(|collection|).  The batch is broadcast; the base collection
         does not shuffle.
 
-        One pass over the batch (r15): the strict Q4/Q5 validation and the
+        One pass over the batch: the strict Q4/Q5 validation and the
         id report used to be two separate full scans of the batch (a
         ``limit(1)`` bad-row probe plus a post-dedup id collect); both now
         ride the SAME job — per-row ``(id, pos, dim, norm)`` is collected
@@ -333,18 +376,25 @@ class VectorCollection:
 
         Two paths give the same rows, score bits, tie order and schema:
 
-        * Resident: ``where`` is None and the handle's state is exactly the
-          Parquet files it opened or last saved, local and at most
-          ``_RESIDENT_MAX_BYTES``. The first such call reads those files
-          into a driver-resident float32 matrix; every call then scores all
-          rows in one vectorized pass and returns a local DataFrame, so it
-          runs no Spark job. On the Spark path the interpreted
-          ``zip_with``/``aggregate`` fold plus one job per call are most of
-          a serving call's time.
-        * Spark: everything else (a ``where``, unsaved mutations, larger or
-          non-local files), as one plan: scan → score →
+        * Resident: the handle's state is exactly the Parquet files it
+          opened or last saved, local and at most ``_RESIDENT_MAX_BYTES``,
+          and ``where`` is None or an equality subset: ``col = literal``,
+          or an ``AND`` of such terms, where ``col`` is a top-level integer
+          or string column and the literal is non-null and of exactly its
+          type. The first such call reads the files into a driver-resident
+          float32 matrix; every call then scores all rows in one vectorized
+          pass, masks them by ``where`` and ``better_than``, and returns a
+          local DataFrame, so it runs no Spark job. On the Spark path the
+          interpreted ``zip_with``/``aggregate`` fold plus one job per call
+          are most of a serving call's time.
+        * Spark: everything else (any other ``where``, unsaved mutations,
+          larger or non-local files), as one plan: scan → score →
           TakeOrderedAndProject. The query travels as one folded literal
-          node (``folded_array_lit``).
+          node (``folded_array_lit``). Floating-point columns stay here
+          because Spark's ``=`` holds for NaN = NaN.
+
+        Either way ``where`` is analyzed against the collection first, so an
+        invalid predicate raises the same ``AnalysisException``.
         """
         if top_k < 0:
             raise ValueError(f"top_k must be >= 0, got {top_k}")
@@ -358,13 +408,11 @@ class VectorCollection:
             raise ZeroVectorError("zero, non-finite or overflowing query vector")
         q = [x / qnorm for x in query_vector]  # O3a, hoisted to the driver
 
-        if where is None:
-            resident = self._resident_state()
-            if resident is not None:
-                return self._resident_query(resident, q, top_k, better_than)
-        df = self._df
-        if where is not None:
-            df = df.filter(where)
+        df = self._df if where is None else self._df.filter(where)
+        terms = [] if where is None else _equality_terms(df)
+        resident = None if terms is None else self._resident_state()
+        if resident is not None:
+            return self._resident_query(resident, q, top_k, better_than, terms)
         df = self._scored(df, q)
         if better_than is not None:
             df = df.filter(F.col(METRICS_COL) >= float(better_than))
@@ -432,13 +480,21 @@ class VectorCollection:
         if not np.isfinite(matrix).all():
             return None
         schema = self._scored(df, [0.0] * self.embedding_dim).schema
-        return _Resident(table, matrix, table.column(ID_COL).to_pylist(), schema)
+        out = df._jdf.queryExecution().analyzed().output()
+        columns = {out.apply(i).exprId().id(): c for i, c in enumerate(df.columns)}
+        return _Resident(table, matrix, table.column(ID_COL).to_pylist(), schema, columns)
 
     def _resident_query(
-        self, res: _Resident, q: list[float], top_k: int, better_than: float | None
+        self,
+        res: _Resident,
+        q: list[float],
+        top_k: int,
+        better_than: float | None,
+        equalities: list[tuple[int, Any]],
     ) -> DataFrame:
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         from nano_vectordb_rs_spark.operators.fastknn import _make_keep_topk
 
@@ -450,9 +506,16 @@ class VectorCollection:
         for j, qj in enumerate(q):
             np.multiply(res.matrix[:, j], qj, out=term, dtype=np.float64)
             scores += term
-        cand = np.arange(n)
+        keep = np.ones(n, dtype=bool)
+        # attributes map to columns by exprId, not name: F.col("LABEL")
+        # analyzes to LABEL#2 over a column stored as "label"
+        for expr_id, value in equalities:
+            column = res.table.column(res.columns[expr_id])
+            eq = pc.equal(column, pa.scalar(value, column.type)).fill_null(False)
+            keep &= eq.to_numpy(zero_copy_only=False)
         if better_than is not None:
-            cand = np.flatnonzero(scores >= float(better_than))
+            keep &= scores >= float(better_than)
+        cand = np.flatnonzero(keep)
         cand = cand[_make_keep_topk()(scores[cand], top_k)] if top_k else cand[:0]
         # Python str order is code-point order, which is Spark's UTF-8 byte order
         rows = sorted(cand.tolist(), key=lambda i: (-scores[i], res.ids[i]))[:top_k]
@@ -505,14 +568,25 @@ class VectorCollection:
 
     def get(self, ids: list[str], ordered: bool = False) -> DataFrame:
         """Point lookup; missing ids silently dropped (src/lib.rs:263-270).
-        Ids are compared as strings; duplicates return their row once.
+        Ids are compared as strings. Unordered, each stored row whose id is
+        requested comes back once, however often it is requested.
+        ``ordered=True`` returns one row per requested position in
+        requested-id order, matching the reference's sequential lookup loop.
 
-        The unordered lookup is an ``IN`` filter pushed to the Parquet scan:
-        the id list is driver-sized by contract, so one filtered scan beats
-        a broadcast join, which costs a second Spark job. ``ordered=True``
-        returns rows in requested-id order, matching the reference's
-        sequential lookup loop — a broadcast inner join tagged with the
+        When ``query()`` has already loaded this handle's driver-resident
+        copy, the lookup is answered from it (an Arrow ``is_in`` and
+        ``take``) as a local DataFrame: no Spark job, same rows and schema.
+        ``get`` never loads the copy itself: reading the whole collection
+        costs more than one pushed-down scan for a few ids.
+
+        Otherwise the unordered lookup is an ``IN`` filter pushed to the
+        Parquet scan: the id list is driver-sized by contract, so one
+        filtered scan beats a broadcast join, which costs a second Spark
+        job. The ordered lookup is a broadcast inner join tagged with the
         request position, so still a single scan, no shuffle."""
+        resident = self._resident
+        if resident is not None and resident[0] is self._df and resident[1] is not None:
+            return self._resident_get(resident[1], [str(i) for i in ids], ordered)
         if ordered:
             ids_df = self.spark.createDataFrame(
                 [(str(i), p) for p, i in enumerate(ids)], f"{ID_COL} string, __pos__ int"
@@ -523,6 +597,27 @@ class VectorCollection:
                 .drop("__pos__")
             )
         return self._df.filter(F.col(ID_COL).isin([str(i) for i in ids]))
+
+    def _resident_get(self, res: _Resident, ids: list[str], ordered: bool) -> DataFrame:
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        stored = res.table.column(ID_COL)
+        hit = pc.is_in(stored, value_set=pa.array(ids, stored.type))
+        rows = np.flatnonzero(hit.to_numpy(zero_copy_only=False)).tolist()
+        schema = self._df.schema
+        if ordered:
+            by_id: dict[str, list[int]] = {}
+            for i in rows:
+                by_id.setdefault(res.ids[i], []).append(i)
+            rows = [i for k in ids for i in by_id.get(k, ())]
+            # the join puts its key column first
+            schema = T.StructType(
+                [schema[ID_COL]] + [f for f in schema.fields if f.name != ID_COL]
+            )
+        out = res.table.take(pa.array(rows, pa.int64())).select(schema.fieldNames())
+        return self.spark.createDataFrame(out, schema=schema)
 
     def delete(self, ids: list[str]) -> None:
         """Anti-join removal (src/lib.rs:273-286); cannot desynchronize
@@ -551,7 +646,7 @@ class VectorCollection:
 
         Without this, a crash in that window would leave open() silently
         creating an EMPTY collection while the real data sat in dirs it
-        never looks at (the pre-r09 data-loss hole)."""
+        never looks at."""
         if os.path.exists(path):
             return
         staged, old = path + ".staging", path + ".old"
@@ -645,7 +740,7 @@ class VectorCollection:
     # contract (like the reference's &mut self API): two handles snapshotting
     # the same store concurrently can interleave manifest versions.
     #
-    # Crash-safety across the WHOLE lifecycle (r09): save() uses a
+    # Crash-safety across the WHOLE lifecycle: save() uses a
     # rename-aside swap whose every window is replayed by
     # _recover_interrupted_save on the next open(); save_snapshot()
     # publishes with a single rename and versions past crash-orphaned vN
@@ -892,8 +987,7 @@ class VectorCollection:
         percent-encoded), so both this and ``_dir_backs`` compare ABSOLUTE
         decoded path components — a relative collection path must still
         match the absolute URI paths Spark reports, or a guard silently
-        passes and a sweep deletes the files backing the live handle (the
-        r08 relative-path data-loss bug)."""
+        passes and a sweep deletes the files backing the live handle."""
         from urllib.parse import unquote, urlparse
 
         return {

@@ -648,7 +648,8 @@ def test_collection_serving_calls_are_single_scans(spark, tmp_path):
         )
     )
     c.save()
-    # get: an IN filter pushed to the parquet scan, no broadcast job
+    # get before the resident copy is loaded: an IN filter pushed to the
+    # parquet scan, no broadcast job
     a = audit_plan(c.get(["v1", "v5"]))
     assert a["n_broadcasts"] == 0 and a["n_broadcast_joins"] == 0
     assert a["n_shuffles"] == 0
@@ -663,10 +664,14 @@ def test_collection_serving_calls_are_single_scans(spark, tmp_path):
     try:
         top = c.query([1.0, 0.0, 0.0, 0.0], top_k=3)
         assert len(top.collect()) == 3
+        # and once the query loaded the copy, get is served from it too
+        got = c.get(["v1", "v5"])
+        assert len(got.collect()) == 2
         assert list(sc.statusTracker().getJobIdsForGroup("resident_query")) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert "FileScan" not in plan_string(top)
+    assert "FileScan" not in plan_string(got)
 
 
 def test_round_robin_exchange_counted_apart_from_shuffles(spark):
